@@ -26,8 +26,10 @@ Scale design (100 TB of interactions):
   rank-8 least-squares solve could have used. The blocked
   formulation (MLlib's user-block x item-block joins) is the
   upgrade path if exact hub histories ever matter.
-- Factor frames are O(entities x rank) rows, localCheckpointed per
-  half-step (the pagerank/connected_components lineage discipline).
+- Factor frames are O(entities x rank) rows. Each half-step is one
+  pass of operators/_iterate.py (its docstring holds the lineage
+  policy); both sides ride one state frame, so the side held fixed is
+  copied forward with the freshly solved one.
 - Initialization is the repo's md5 determinism coin -- factors are a
   pure function of (id, dimension, salt), reproducible across
   sessions, partitionings, and engines with no RNG state; the replica
@@ -51,6 +53,10 @@ import hashlib
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from bigdata_storage_and_proccess_job_data_spark.operators._iterate import (
+    _iterate,
+)
 
 _DENOM = float(1 << 60)
 
@@ -200,21 +206,32 @@ def als_fit(
         & F.col("_r").isNotNull()
     )
     r = r.persist()
+
+    def half_step(f: DataFrame, j: int, _seen) -> DataFrame:
+        # state rows are user factors (_u set) or item factors (_i
+        # set); even passes solve users against the items, odd ones
+        # items against the users
+        solve, fixed = ("_u", "_i") if j % 2 == 0 else ("_i", "_u")
+        held = f.filter(F.col(fixed).isNotNull()).select(fixed, "factors")
+        solved = _solve_side(
+            r, held.withColumnRenamed(fixed, "id"), solve, fixed, "_r",
+            rank, reg, broadcast_items and j % 2 == 0,
+        )
+        return held.unionByName(
+            solved.withColumnRenamed("id", solve), allowMissingColumns=True
+        )
+
     try:
-        items = init_factors(r, "_i", rank, salt).localCheckpoint()
-        users = None
-        for _ in range(iters):
-            users = _solve_side(
-                r, items, "_u", "_i", "_r", rank, reg, broadcast_items
-            ).localCheckpoint()
-            items = _solve_side(
-                r, users, "_i", "_u", "_r", rank, reg, False
-            ).localCheckpoint()
-        return {
-            "user_factors": users,
-            "item_factors": items,
-            "rank": rank,
-        }
+        f, _ = _iterate(
+            init_factors(r, "_i", rank, salt).withColumnRenamed("id", "_i"),
+            half_step,
+            2 * iters,
+        )
+        users, items = (
+            f.filter(F.col(c).isNotNull()).select(F.col(c).alias("id"), "factors")
+            for c in ("_u", "_i")
+        )
+        return {"user_factors": users, "item_factors": items, "rank": rank}
     finally:
         r.unpersist()
 

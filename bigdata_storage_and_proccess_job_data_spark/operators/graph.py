@@ -18,12 +18,12 @@ to the teleport vector each round via a one-row broadcast scalar, the
 standard Page-Brin correction that keeps the rank vector a probability
 distribution (sums to 1 every round -- tested).
 
-Lineage management follows connected_components' hybrid (see its
-docstring for the full rationale): persist each round, unpersist the
-superseded frame deterministically, localCheckpoint every few rounds to
-bound plan depth. Driver-side materializations are the node count and
-(personalized only) the in-graph seed count -- two bounded longs, like
-the documented scalar collects elsewhere in the engine.
+Every iterative operator here runs its passes through
+operators/_iterate.py, whose docstring holds the one lineage policy
+(checkpointing, release, convergence aggregates). Pagerank's other
+driver-side materializations are the node count and (personalized
+only) the in-graph seed count -- two bounded longs, like the
+documented scalar collects elsewhere in the engine.
 """
 
 from __future__ import annotations
@@ -33,7 +33,9 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_CHECKPOINT_EVERY = 3
+from bigdata_storage_and_proccess_job_data_spark.operators._iterate import (
+    _iterate,
+)
 
 
 def pagerank(
@@ -49,8 +51,8 @@ def pagerank(
     every node appearing as a source or destination, ranks summing to 1.
     NULL endpoints drop; self-loops count like any edge. Fixed
     ``iters`` rounds of power iteration -- no per-round convergence
-    collect, so the driver loop stays lazy between checkpoints; 10-20
-    rounds is the standard operating range (residual decays as
+    collect, each round one checkpoint job (operators/_iterate.py);
+    10-20 rounds is the standard operating range (residual decays as
     damping^iters).
 
     Unweighted (default): duplicate edges collapse, each out-edge gets
@@ -125,60 +127,46 @@ def pagerank(
             .persist()
         )
         in_graph.unpersist()
-    ranks = tele.select("node", F.col("_t").alias("rank")).localCheckpoint()
-    persisted_prev: DataFrame | None = None
+
+    def power_step(ranks: DataFrame, _i: int, _seen) -> DataFrame:
+        contribs = (
+            e.join(ranks.select(F.col("node").alias("_s"), "rank"), "_s")
+            .join(deg, "_s")
+            .groupBy("_d")
+            .agg(
+                F.sum(F.col("rank") * F.col("_w") / F.col("_deg")).alias(
+                    "_c"
+                )
+            )
+        )
+        dangling = ranks.join(deg, ranks.node == deg._s, "left_anti").agg(
+            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang")
+        )
+        return (
+            nodes.join(
+                contribs.select(F.col("_d").alias("node"), "_c"),
+                "node",
+                "left",
+            )
+            .join(tele, "node")
+            .crossJoin(F.broadcast(dangling))
+            .select(
+                "node",
+                (
+                    F.lit(1.0 - d) * F.col("_t")
+                    + F.lit(d)
+                    * (
+                        F.coalesce(F.col("_c"), F.lit(0.0))
+                        + F.col("_dang") * F.col("_t")
+                    )
+                ).alias("rank"),
+            )
+        )
+
     try:
-        for i in range(iters):
-            contribs = (
-                e.join(
-                    ranks.select(F.col("node").alias("_s"), "rank"),
-                    "_s",
-                )
-                .join(deg, "_s")
-                .groupBy("_d")
-                .agg(
-                    F.sum(
-                        F.col("rank") * F.col("_w") / F.col("_deg")
-                    ).alias("_c")
-                )
-            )
-            dangling = (
-                ranks.join(deg, ranks.node == deg._s, "left_anti")
-                .agg(
-                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang")
-                )
-            )
-            nxt = (
-                nodes.join(
-                    contribs.select(F.col("_d").alias("node"), "_c"),
-                    "node",
-                    "left",
-                )
-                .join(tele, "node")
-                .crossJoin(F.broadcast(dangling))
-                .select(
-                    "node",
-                    (
-                        F.lit(1.0 - d) * F.col("_t")
-                        + F.lit(d)
-                        * (
-                            F.coalesce(F.col("_c"), F.lit(0.0))
-                            + F.col("_dang") * F.col("_t")
-                        )
-                    ).alias("rank"),
-                )
-            )
-            if (i + 1) % _CHECKPOINT_EVERY == 0 or i == iters - 1:
-                nxt = nxt.localCheckpoint()
-                if persisted_prev is not None:
-                    persisted_prev.unpersist()
-                    persisted_prev = None
-            else:
-                nxt = nxt.persist()
-                if persisted_prev is not None:
-                    persisted_prev.unpersist()
-                persisted_prev = nxt
-            ranks = nxt
+        ranks, _ = _iterate(
+            tele.select("node", F.col("_t").alias("rank")), power_step, iters
+        )
         return ranks
     finally:
         e.unpersist()
@@ -559,9 +547,9 @@ def label_propagation(
 
     Per round: one equi-join of the label vector against the
     bidirectional edge list + one (node, label) hash agg + one
-    struct-max per node -- O(|E|) like pagerank, same persist/
-    localCheckpoint lineage hybrid, no driver-side graph. Duplicate
-    edges collapse (unweighted) or their weights sum."""
+    struct-max per node -- O(|E|) like pagerank, no driver-side graph
+    (passes run through operators/_iterate.py). Duplicate edges
+    collapse (unweighted) or their weights sum."""
     if iters < 1:
         raise ValueError("iters must be >= 1")
     und = undirected_edges(edges, src, dst)
@@ -592,49 +580,32 @@ def label_propagation(
         )
         .persist()
     )
-    labels = (
-        bi.select("node").distinct().withColumn("label", F.col("node"))
-    ).localCheckpoint()
-    persisted_prev: DataFrame | None = None
+
+    def vote_step(labels: DataFrame, _i: int, _seen) -> DataFrame:
+        votes = (
+            bi.join(labels.select(F.col("node").alias("nbr"), "label"), "nbr")
+            .select("node", "label", "_w")
+            .union(labels.select("node", "label", F.lit(1.0).alias("_w")))
+            .groupBy("node", "label")
+            .agg(F.sum("_w").alias("_v"))
+        )
+        # max weight, then MIN label among the maximizers -- two cheap
+        # aggs keep the tiebreak type-generic (string ids can't ride a
+        # negated struct-max)
+        best = votes.groupBy("node").agg(F.max("_v").alias("_b"))
+        return (
+            votes.join(best, "node")
+            .filter(F.col("_v") == F.col("_b"))
+            .groupBy("node")
+            .agg(F.min("label").alias("label"))
+        )
+
     try:
-        for i in range(iters):
-            votes = (
-                bi.join(
-                    labels.select(
-                        F.col("node").alias("nbr"), "label"
-                    ),
-                    "nbr",
-                )
-                .select("node", "label", "_w")
-                .union(
-                    labels.select(
-                        "node", "label", F.lit(1.0).alias("_w")
-                    )
-                )
-                .groupBy("node", "label")
-                .agg(F.sum("_w").alias("_v"))
-            )
-            # max weight, then MIN label among the maximizers -- two
-            # cheap aggs keep the tiebreak type-generic (string ids
-            # can't ride a negated struct-max)
-            best = votes.groupBy("node").agg(F.max("_v").alias("_b"))
-            nxt = (
-                votes.join(best, "node")
-                .filter(F.col("_v") == F.col("_b"))
-                .groupBy("node")
-                .agg(F.min("label").alias("label"))
-            )
-            if (i + 1) % _CHECKPOINT_EVERY == 0 or i == iters - 1:
-                nxt = nxt.localCheckpoint()
-                if persisted_prev is not None:
-                    persisted_prev.unpersist()
-                    persisted_prev = None
-            else:
-                nxt = nxt.persist()
-                if persisted_prev is not None:
-                    persisted_prev.unpersist()
-                persisted_prev = nxt
-            labels = nxt
+        labels, _ = _iterate(
+            bi.select("node").distinct().withColumn("label", F.col("node")),
+            vote_step,
+            iters,
+        )
         return labels
     finally:
         bi.unpersist()
@@ -658,10 +629,11 @@ def shortest_paths(
     Frontier BFS, all DataFrame ops: each level is one equi-join of the
     CURRENT FRONTIER (not the whole distance table) against the edge
     list plus one anti-join against the known set -- O(edges touched by
-    the frontier) per level, the delta-iteration formulation. Levels
-    localCheckpoint (bounded lineage, pagerank's discipline); the only
-    driver materialization is one frontier-size long per level, which
-    also gives early exit the moment the frontier drains."""
+    the frontier) per level, the delta-iteration formulation. The loop
+    state is the distance table with its newest level flagged as the
+    frontier; the frontier size is each pass's convergence aggregate
+    (operators/_iterate.py), read from the pass's own checkpoint job,
+    so the loop exits the moment the frontier drains."""
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
     e = edges.select(
@@ -673,29 +645,30 @@ def shortest_paths(
         )
     e = e.distinct().persist()
     seed_col = seeds.columns[0]
-    dist = (
+    start = (
         seeds.select(F.col(seed_col).alias("node"))
         .filter(F.col("node").isNotNull())
         .distinct()
-        .withColumn("dist", F.lit(0))
-        .localCheckpoint()
+        .select("node", F.lit(0).alias("dist"), F.lit(True).alias("_f"))
     )
-    frontier = dist.select("node")
+
+    def bfs_step(known: DataFrame, i: int, _seen) -> DataFrame:
+        nxt = (
+            e.join(known.filter("_f").select(F.col("node").alias("_s")), "_s")
+            .select(F.col("_d").alias("node"))
+            .distinct()
+            .join(known.select("node"), "node", "left_anti")
+            .select("node", F.lit(i + 1).alias("dist"), F.lit(True).alias("_f"))
+        )
+        return known.select("node", "dist", F.lit(False).alias("_f")).union(
+            nxt
+        )
+
     try:
-        for h in range(1, max_hops + 1):
-            nxt = (
-                e.join(frontier.withColumnRenamed("node", "_s"), "_s")
-                .select(F.col("_d").alias("node"))
-                .distinct()
-                .join(dist.select("node"), "node", "left_anti")
-                .withColumn("dist", F.lit(h))
-                .localCheckpoint()
-            )
-            if nxt.count() == 0:  # bounded driver scalar per level
-                break
-            dist = dist.union(nxt)
-            frontier = nxt.select("node")
-        return dist
+        known, _ = _iterate(
+            start, bfs_step, max_hops, until=[F.count_if("_f").alias("n")]
+        )
+        return known.select("node", "dist")
     finally:
         e.unpersist()
 
@@ -725,9 +698,11 @@ def tree_rollup(
     after depth-of-tree rounds each ancestor has absorbed its whole
     subtree. Only (node, partial) pairs ever shuffle; the fact table
     is aggregated to per-node subtotals FIRST, so fact volume touches
-    one hash agg regardless of tree depth. Early exit when a level
-    carries no mass (one bounded count per level, the shortest_paths
-    discipline)."""
+    one hash agg regardless of tree depth. The loop state is the
+    running subtotal per node with the mass that arrived this round
+    alongside (``_l``); the count of mass-carrying nodes is each
+    pass's convergence aggregate (operators/_iterate.py), so the loop
+    exits when a level carries no mass."""
     if max_depth < 1:
         raise ValueError("max_depth must be >= 1")
     e = edges.select(
@@ -745,31 +720,41 @@ def tree_rollup(
         .filter(F.col("_n").isNotNull() & F.col("_v").isNotNull())
         .groupBy("_n")
         .agg(F.sum("_v").alias("_v"))
-        .localCheckpoint()
     )
-    total = own
-    level = own  # mass arriving at this depth
+
+    def up_step(acc: DataFrame, _i: int, _seen) -> DataFrame:
+        nxt = (
+            e.join(
+                acc.filter(F.col("_l").isNotNull()).select(
+                    F.col("_n").alias("_c"), "_l"
+                ),
+                "_c",
+            )
+            .groupBy(F.col("_p").alias("_n"))
+            .agg(F.sum("_l").alias("_l"))
+        )
+        return acc.select("_n", "_v").join(nxt, "_n", "full").select(
+            "_n",
+            F.when(F.col("_l").isNull(), F.col("_v"))
+            .when(F.col("_v").isNull(), F.col("_l"))
+            .otherwise(F.col("_v") + F.col("_l"))
+            .alias("_v"),
+            "_l",
+        )
+
     try:
-        for _ in range(max_depth):
-            nxt = (
-                e.join(level.withColumnRenamed("_n", "_c"), "_c")
-                .groupBy(F.col("_p").alias("_n"))
-                .agg(F.sum("_v").alias("_v"))
-                .localCheckpoint()
-            )
-            if nxt.count() == 0:  # bounded driver scalar per level
-                break
-            total = (
-                total.unionByName(nxt)
-                .groupBy("_n")
-                .agg(F.sum("_v").alias("_v"))
-                .localCheckpoint()
-            )
-            level = nxt
+        acc, _ = _iterate(
+            own.withColumn("_l", F.col("_v")),
+            up_step,
+            max_depth,
+            until=[F.count_if(F.col("_l").isNotNull()).alias("n")],
+        )
+        total = acc.select("_n", "_v")
+        # acc holds every valued node (and only nodes of e besides)
         nodes = (
             e.select(F.col("_c").alias("_n"))
             .union(e.select(F.col("_p").alias("_n")))
-            .union(own.select("_n"))
+            .union(total.select("_n"))
             .distinct()
         )
         return nodes.join(total, "_n", "left").select(
@@ -795,15 +780,14 @@ def k_core(
     ``deg`` the node's WITHIN-CORE degree (>= k by construction); empty
     frame when no k-core exists.
 
-    Iterative peel, all DataFrame ops: each round computes degrees over
-    the CURRENT edge set (one explode + hash agg), drops every node
-    below k at once (two anti-joins on the small weak-node set), and
-    re-checkpoints the shrunken edge list -- the synchronous-removal
-    formulation whose round count is bounded by the graph's degeneracy
-    ordering depth, not |V|. Per round the only driver materialization
-    is the weak-node count (the fixed-point test / early exit); edge
-    lists localCheckpoint so lineage stays bounded (the pagerank/BFS
-    discipline). A round that removes nothing is the fixed point.
+    Iterative peel, all DataFrame ops: each round drops every node
+    below k at once (two anti-joins on the small weak-node set) and
+    recounts degrees over the shrunken edge list (one explode + hash
+    agg) -- the synchronous-removal formulation whose round count is
+    bounded by the graph's degeneracy ordering depth, not |V|. The
+    count of nodes left below k is each round's convergence aggregate
+    (operators/_iterate.py); a round that leaves none is the fixed
+    point.
 
     ``max_iter`` guards pathological chains (a long path under k=2
     peels two ends per round); exceeding it RAISES rather than return
@@ -812,29 +796,67 @@ def k_core(
         raise ValueError("k must be >= 1")
     if max_iter < 1:
         raise ValueError("max_iter must be >= 1")
-    und = undirected_edges(edges, src, dst).localCheckpoint()
-    _, deg = _peel(und, k, max_iter, what="k_core")
-    return deg.select("node", F.col("_deg").alias("deg"))
+    state, done = _iterate(
+        _peel_start(undirected_edges(edges, src, dst)),
+        lambda st, _i, _seen: _peel_step(st, k),
+        max_iter,
+        until=[F.count_if("_f").alias("weak")],
+    )
+    if not done:
+        raise _peel_stalled("k_core", max_iter)
+    return state.filter(_live()).select(
+        F.col("a").alias("node"), F.col("_deg").alias("deg")
+    )
 
 
-def _peel(und: DataFrame, k: int, max_iter: int, what: str):
-    """Shared fixed-point peel at threshold ``k`` over a CANONICAL
-    (checkpointed) undirected frame. Returns ``(edges, degrees)`` of
-    the surviving subgraph; raises past ``max_iter`` rounds."""
-    for _ in range(max_iter):
-        deg = _node_degrees(und)
-        weak = (
-            deg.filter(F.col("_deg") < k).select("node").localCheckpoint()
+def _live():
+    """A live (not yet peeled) node row of the peel state."""
+    return F.col("b").isNull() & F.col("core").isNull()
+
+
+def _peel_start(und: DataFrame) -> DataFrame:
+    """Peel-loop state over a CANONICAL undirected frame, one frame
+    with two row kinds: edge rows (a, b) and one node row per node
+    (a = node, b NULL) carrying its current degree ``_deg`` and, once
+    peeled, its ``core``; ``_f`` flags live nodes below the round's
+    threshold."""
+    return (
+        und.unionByName(
+            _node_degrees(und).withColumnRenamed("node", "a"),
+            allowMissingColumns=True,
         )
-        if weak.count() == 0:  # bounded driver scalar per round
-            return und, deg
-        und = (
-            und.join(weak.withColumnRenamed("node", "a"), "a", "left_anti")
-            .join(weak.withColumnRenamed("node", "b"), "b", "left_anti")
-            .localCheckpoint()
-        )
-    raise RuntimeError(
-        f"{what} did not reach a fixed point in {max_iter} rounds; "
+        .withColumn("core", F.lit(None).cast("int"))
+        .withColumn("_f", F.lit(False))
+    )
+
+
+def _peel_step(state: DataFrame, k: int) -> DataFrame:
+    """One synchronous peel round at threshold ``k``: drop every live
+    node of degree < k with all its edges, recount degrees, and mark
+    each node left without an edge as peeled at core k - 1."""
+    edges = state.filter(F.col("b").isNotNull()).select("a", "b")
+    nodes = state.filter(F.col("b").isNull()).select("a", "_deg", "core")
+    weak = nodes.filter(F.col("_deg") < k).select("a")
+    kept = edges.join(weak, "a", "left_anti").join(
+        weak.withColumnRenamed("a", "b"), "b", "left_anti"
+    )
+    deg = _node_degrees(kept).select(
+        F.col("node").alias("a"), F.col("_deg").alias("_nd")
+    )
+    node_rows = nodes.join(deg, "a", "left").select(
+        "a",
+        F.col("_nd").alias("_deg"),
+        F.when(F.col("core").isNull() & F.col("_nd").isNull(), F.lit(k - 1))
+        .otherwise(F.col("core"))
+        .alias("core"),
+        (F.col("_nd") < k).alias("_f"),
+    )
+    return kept.unionByName(node_rows, allowMissingColumns=True)
+
+
+def _peel_stalled(what: str, rounds: int) -> RuntimeError:
+    return RuntimeError(
+        f"{what} did not reach a fixed point in {rounds} rounds; "
         "raise max_iter (long chains under small k peel slowly)"
     )
 
@@ -855,31 +877,45 @@ def core_numbers(
     start at 1).
 
     Level-by-level peel: the k-core survivor graph at level k seeds the
-    (k+1)-peel, so each edge is processed only while it is still alive
-    -- total work tracks the degeneracy ordering, and the level count
-    is the graph's degeneracy (small for real link graphs: tens, not
-    |V|). Nodes dropped while peeling at level k+1 get core = k. Per
-    level the dropped-node frame rides the already-checkpointed
-    survivor frames, so the output union tree stays shallow.
+    next level's peel, so each edge is processed only while it is still
+    alive -- total work tracks the degeneracy ordering. Nodes dropped
+    while peeling at level k+1 get core = k. Levels that would peel
+    nothing are skipped: once level k reaches its fixed point, every
+    survivor has degree >= m, the survivors' minimum degree, so the
+    (k+1)..m cores all equal the k-core and the next level peeled is
+    m + 1 (its dropped nodes get core m). The level count is thus the
+    number of DISTINCT core values, not the degeneracy. One peel-loop
+    state (k_core's) carries edges and per-node degrees and cores; each
+    round observes the live-node count, the count below the level and
+    the live minimum degree (operators/_iterate.py).
     ``max_core`` guards runaway loops (degeneracy cannot exceed
-    sqrt(2|E|); hitting the guard raises)."""
-    und = undirected_edges(edges, src, dst).localCheckpoint()
-    prev_nodes = _node_degrees(und).select("node")
-    out: DataFrame | None = None
-    k = 2
-    while k <= max_core + 1:
-        und, deg = _peel(und, k, max_iter_per_k, what="core_numbers")
-        survivors = deg.select("node").localCheckpoint()
-        dropped = prev_nodes.join(survivors, "node", "left_anti").select(
-            "node", F.lit(k - 1).alias("core")
-        )
-        out = dropped if out is None else out.union(dropped)
-        if survivors.count() == 0:  # bounded driver scalar per level
-            return out
-        prev_nodes = survivors
-        k += 1
-    raise RuntimeError(
-        f"core_numbers exceeded max_core={max_core} levels"
+    sqrt(2|E|)); a core value above it raises."""
+    lvl = {"k": 2, "rounds": 0}
+
+    def level_step(state: DataFrame, _i: int, seen) -> DataFrame:
+        if seen is not None and not seen["weak"]:
+            lvl.update(k=seen["mindeg"] + 1, rounds=0)
+        if lvl["k"] - 1 > max_core:
+            raise RuntimeError(
+                f"core_numbers exceeded max_core={max_core} levels"
+            )
+        if lvl["rounds"] == max_iter_per_k:
+            raise _peel_stalled("core_numbers", max_iter_per_k)
+        lvl["rounds"] += 1
+        return _peel_step(state, lvl["k"])
+
+    state, _ = _iterate(
+        _peel_start(undirected_edges(edges, src, dst)),
+        level_step,
+        (max_core + 1) * max_iter_per_k,
+        until=[
+            F.count_if(_live()).alias("live"),
+            F.count_if("_f").alias("weak"),
+            F.min(F.when(_live(), F.col("_deg"))).alias("mindeg"),
+        ],
+    )
+    return state.filter(F.col("b").isNull()).select(
+        F.col("a").alias("node"), "core"
     )
 
 
@@ -906,9 +942,10 @@ def weighted_shortest_paths(
     candidates that beat the incumbent via one left join -- O(edges
     out of the frontier) per round. For nonnegative weights the
     improved set drains within (hop count of the weighted shortest-
-    path tree) rounds; termination is detected by a one-long frontier
-    count per round (the engine's bounded-scalar discipline) and
-    localCheckpoint bounds lineage each round. Unlike hop-BFS a node
+    path tree) rounds. The loop state is the distance table with the
+    nodes improved this round flagged as the next frontier; the
+    frontier size is each round's convergence aggregate
+    (operators/_iterate.py), which detects termination. Unlike hop-BFS a node
     can re-enter the frontier when a cheaper longer-hop path arrives
     later -- that is the relaxation, not a bug.
 
@@ -951,43 +988,45 @@ def weighted_shortest_paths(
                 "requires nonnegative weights"
             )
         seed_col = seeds.columns[0]
-        dist = (
+        start = (
             seeds.select(F.col(seed_col).alias("node"))
             .filter(F.col("node").isNotNull())
             .distinct()
-            .withColumn("dist", F.lit(0.0))
-            .localCheckpoint()
+            .select("node", F.lit(0.0).alias("dist"), F.lit(True).alias("_f"))
         )
-        frontier = dist
-        for _ in range(max_iter):
+
+        def relax_step(known: DataFrame, _i: int, _seen) -> DataFrame:
             cand = (
                 e.join(
-                    frontier.withColumnRenamed("node", "_s"), "_s"
+                    known.filter("_f").select(
+                        F.col("node").alias("_s"), "dist"
+                    ),
+                    "_s",
                 )
                 .groupBy(F.col("_d").alias("node"))
                 .agg(F.min(F.col("dist") + F.col("_w")).alias("_cand"))
             )
-            nxt = (
-                cand.join(dist, "node", "left")
-                .filter(
-                    F.col("dist").isNull()
-                    | (F.col("_cand") < F.col("dist"))
-                )
-                .select("node", F.col("_cand").alias("dist"))
-                .localCheckpoint()
+            better = F.coalesce(
+                F.col("dist").isNull() | (F.col("_cand") < F.col("dist")),
+                F.lit(False),
             )
-            if nxt.count() == 0:  # bounded driver scalar per round
-                return dist
-            dist = (
-                dist.join(nxt.select("node"), "node", "left_anti")
-                .union(nxt)
-                .localCheckpoint()
+            return known.select("node", "dist").join(cand, "node", "full").select(
+                "node",
+                F.when(better, F.col("_cand"))
+                .otherwise(F.col("dist"))
+                .alias("dist"),
+                better.alias("_f"),
             )
-            frontier = nxt
-        raise RuntimeError(
-            f"weighted_shortest_paths did not converge in {max_iter} "
-            "rounds; raise max_iter for high-diameter graphs"
+
+        known, done = _iterate(
+            start, relax_step, max_iter, until=[F.count_if("_f").alias("n")]
         )
+        if not done:
+            raise RuntimeError(
+                f"weighted_shortest_paths did not converge in {max_iter} "
+                "rounds; raise max_iter for high-diameter graphs"
+            )
+        return known.select("node", "dist")
     finally:
         e.unpersist()
 
@@ -1039,6 +1078,61 @@ def _walk_adjacency(
     return adj
 
 
+def _uniform_pick(t: int, salt: str):
+    """Step ``t``'s neighbor for walk (start, walk) at the joined
+    ``_nbrs`` array: index md5(start:walk:t:salt) mod degree."""
+    coin = F.expr(
+        "conv(substring(md5(concat_ws(':', cast(start as string), "
+        f"cast(walk as string), '{t}', '{salt}')), 1, 15), 16, 10)"
+    ).cast("long")
+    return F.element_at(
+        F.col("_nbrs"), (coin % F.size("_nbrs") + 1).cast("int")
+    )
+
+
+def _walk_corpus(adj: DataFrame, walks_per_node: int, walk_len: int, step):
+    """The walk generators' shared driver: ``walks_per_node`` walks
+    from every node of ``adj``, ``walk_len`` passes of ``step(cur, t)``
+    through operators/_iterate.py (every step's frontier checkpointed
+    and kept), then one sort+agg folding the (walk, pos, node) trail
+    into sequences."""
+    starts = (
+        adj.select(F.col("node").alias("start"))
+        .crossJoin(
+            F.broadcast(
+                adj.sparkSession.range(walks_per_node).select(
+                    F.col("id").cast("int").alias("walk")
+                )
+            )
+        )
+        .select("start", "walk", F.col("start").alias("_cur"))
+    )
+    steps, _ = _iterate(
+        starts, lambda cur, i, _seen: step(cur, i + 1), walk_len, keep=True
+    )
+    trail = steps[0].select(
+        "start", "walk", F.lit(0).alias("pos"), F.col("_cur").alias("node")
+    )
+    for t, cur in enumerate(steps[1:], start=1):
+        trail = trail.union(
+            cur.select("start", "walk", F.lit(t).alias("pos"), "_cur")
+        )
+    return (
+        trail.groupBy("start", "walk")
+        .agg(
+            F.array_sort(F.collect_list(F.struct("pos", "node"))).alias(
+                "_tr"
+            )
+        )
+        .select(
+            "start",
+            "walk",
+            F.col("_tr.node").alias("seq"),
+            (F.size("_tr") - 1).alias("hops"),
+        )
+    )
+
+
 def random_walks(
     edges: DataFrame,
     walk_len: int,
@@ -1075,8 +1169,8 @@ def random_walks(
     wide; ``max_neighbors`` md5-downsamples each out-set to a bounded
     array (deterministic per node) for degree-skewed graphs -- at
     corpus scale a 10M-degree hub's array must not ride every join.
-    Lineage: the frontier localCheckpoints per step (pagerank's
-    discipline).
+    Steps run through operators/_iterate.py, which keeps every step's
+    frontier for the trail.
 
     Returns (start, walk, seq: array of nodes, hops)."""
     if walk_len < 1:
@@ -1086,68 +1180,14 @@ def random_walks(
     adj = _walk_adjacency(
         edges, src, dst, salt, max_neighbors, directed
     ).persist()
+
+    def uniform_step(cur: DataFrame, t: int) -> DataFrame:
+        return cur.join(adj.withColumnRenamed("node", "_cur"), "_cur").select(
+            "start", "walk", _uniform_pick(t, salt).alias("_cur")
+        )
+
     try:
-        starts = adj.select("node").crossJoin(
-            F.broadcast(
-                adj.sparkSession.range(walks_per_node).select(
-                    F.col("id").cast("int").alias("walk")
-                )
-            )
-        )
-        cur = starts.select(
-            F.col("node").alias("start"),
-            "walk",
-            F.col("node").alias("_cur"),
-        ).localCheckpoint()
-        trail = cur.select(
-            "start", "walk", F.lit(0).alias("pos"),
-            F.col("_cur").alias("node"),
-        )
-        for t in range(1, walk_len + 1):
-            stepped = (
-                cur.join(
-                    adj.withColumnRenamed("node", "_cur"), "_cur"
-                )
-                .select(
-                    "start",
-                    "walk",
-                    F.element_at(
-                        F.col("_nbrs"),
-                        (
-                            F.expr(
-                                "conv(substring(md5(concat_ws(':', "
-                                "cast(start as string), "
-                                "cast(walk as string), "
-                                f"'{t}', '{salt}')), 1, 15), 16, 10)"
-                            ).cast("long")
-                            % F.size("_nbrs")
-                            + 1
-                        ).cast("int"),
-                    ).alias("_cur"),
-                )
-                .localCheckpoint()
-            )
-            trail = trail.union(
-                stepped.select(
-                    "start", "walk", F.lit(t).alias("pos"),
-                    F.col("_cur").alias("node"),
-                )
-            )
-            cur = stepped
-        return (
-            trail.groupBy("start", "walk")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", "node"))
-                ).alias("_tr")
-            )
-            .select(
-                "start",
-                "walk",
-                F.col("_tr.node").alias("seq"),
-                (F.size("_tr") - 1).alias("hops"),
-            )
-        )
+        return _walk_corpus(adj, walks_per_node, walk_len, uniform_step)
     finally:
         adj.unpersist()
 
@@ -1310,56 +1350,22 @@ def biased_random_walks(
     adj = _walk_adjacency(
         edges, src, dst, salt, max_neighbors, directed
     ).persist()
-    try:
-        starts = adj.select("node").crossJoin(
-            F.broadcast(
-                adj.sparkSession.range(walks_per_node).select(
-                    F.col("id").cast("int").alias("walk")
-                )
-            )
-        )
+    padj = adj.select(
+        F.col("node").alias("_prev"), F.col("_nbrs").alias("_pnbrs")
+    )
+    inv_p, inv_q = 1.0 / float(p), 1.0 / float(q)
+    w_sql = (
+        "case when nb = _prev then {ip!r} "
+        "when _pnbrs is not null and array_contains(_pnbrs, nb) "
+        "then 1.0 else {iq!r} end"
+    ).format(ip=inv_p, iq=inv_q)
 
-        def coin_expr(t: int):
-            return (
-                F.expr(
-                    "conv(substring(md5(concat_ws(':', "
-                    "cast(start as string), cast(walk as string), "
-                    f"'{t}', '{salt}')), 1, 15), 16, 10)"
-                ).cast("long")
-            )
-
-        # step 1: uniform (no prev yet) -- random_walks' index coin
-        cur = (
-            starts.select(
-                F.col("node").alias("start"),
-                "walk",
-                F.col("node").alias("_cur"),
-            )
-            .join(adj.withColumnRenamed("node", "_cur"), "_cur")
-            .select(
-                "start",
-                "walk",
-                F.col("_cur").alias("_prev"),
-                F.element_at(
-                    F.col("_nbrs"),
-                    (coin_expr(1) % F.size("_nbrs") + 1).cast("int"),
-                ).alias("_cur"),
-            )
-            .localCheckpoint()
-        )
-        trail = starts.select(
-            F.col("node").alias("start"), "walk",
-            F.lit(0).alias("pos"), F.col("node").alias("node"),
-        ).union(
-            cur.select("start", "walk", F.lit(1).alias("pos"), "_cur")
-        )
-        inv_p, inv_q = 1.0 / float(p), 1.0 / float(q)
-        w_sql = (
-            "case when nb = _prev then {ip!r} "
-            "when _pnbrs is not null and array_contains(_pnbrs, nb) "
-            "then 1.0 else {iq!r} end"
-        ).format(ip=inv_p, iq=inv_q)
-        for t in range(2, walk_len + 1):
+    def biased_step(cur: DataFrame, t: int) -> DataFrame:
+        stepped = cur.join(adj.withColumnRenamed("node", "_cur"), "_cur")
+        if t == 1:
+            # no prev yet: random_walks' uniform index coin
+            pick = _uniform_pick(1, salt)
+        else:
             u60 = (
                 "cast(conv(substring(md5(concat_ws(':', "
                 "cast(start as string), cast(walk as string), "
@@ -1391,44 +1397,16 @@ def biased_random_walks(
                 "then i else cast(null as int) end) end, "
                 "acc -> coalesce(acc.pick, size(_nbrs)))"
             )
-            padj = adj.select(
-                F.col("node").alias("_prev"),
-                F.col("_nbrs").alias("_pnbrs"),
+            stepped = stepped.join(padj, "_prev", "left").withColumn(
+                "_target", F.expr(f"({u60}) * ({tot})")
             )
-            stepped = (
-                cur.join(adj.withColumnRenamed("node", "_cur"), "_cur")
-                .join(padj, "_prev", "left")
-                .withColumn("_target", F.expr(f"({u60}) * ({tot})"))
-                .select(
-                    "start",
-                    "walk",
-                    F.col("_cur").alias("_prev"),
-                    F.element_at(
-                        F.col("_nbrs"), F.expr(sel)
-                    ).alias("_cur"),
-                )
-                .localCheckpoint()
-            )
-            trail = trail.union(
-                stepped.select(
-                    "start", "walk", F.lit(t).alias("pos"), "_cur"
-                )
-            )
-            cur = stepped
-        return (
-            trail.groupBy("start", "walk")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", "node"))
-                ).alias("_tr")
-            )
-            .select(
-                "start",
-                "walk",
-                F.col("_tr.node").alias("seq"),
-                (F.size("_tr") - 1).alias("hops"),
-            )
+            pick = F.element_at(F.col("_nbrs"), F.expr(sel))
+        return stepped.select(
+            "start", "walk", F.col("_cur").alias("_prev"), pick.alias("_cur")
         )
+
+    try:
+        return _walk_corpus(adj, walks_per_node, walk_len, biased_step)
     finally:
         adj.unpersist()
 

@@ -20,6 +20,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bigdata_storage_and_proccess_job_data_spark.functions import text
+from bigdata_storage_and_proccess_job_data_spark.operators._iterate import (
+    _iterate,
+)
 
 
 def minhash_signature(
@@ -673,29 +676,15 @@ def connected_components(
     sf0.1 regime hit exactly this at 20 rounds); with it, the label
     distance to the component min doubles per round, so convergence is
     O(log diameter). Quasi-clique banding clusters still terminate in
-    2-3 rounds; chains of length L need ~log2(L). Each round is checked
-    by an exact changed-row count; raises if max_iters rounds don't
-    converge. Invariant: a vertex's label is always the id of some
-    vertex in its own component (neighbor-min picks a neighbor's label,
-    the jump picks that vertex's label), and at fixpoint adjacent
-    labels are equal, so every component carries its min id exactly --
-    the recursive-CTE cross-check and union-find twins pin this.
-
-    Lineage management (the classic iterative-algorithm trap): persisting
-    alone caches the DATA but the logical plan still accumulates one
-    join+agg layer per round, so Catalyst re-analyzes an ever-deeper
-    tree (the final plan text here held 2000+ scan nodes before this
-    fix). But localCheckpoint-ing EVERY round has the opposite problem:
-    DataFrame.unpersist() cannot release checkpoint blocks, so
-    superseded rounds linger in executor storage until GC. The hybrid is
-    GraphFrames' pattern: persist each round and unpersist the
-    superseded frame deterministically, with a localCheckpoint every
-    ``_CHECKPOINT_EVERY`` rounds to cut lineage -- plan depth is bounded
-    by the interval, and only the (few, tiny (id, component)) checkpoint
-    frames wait for the ContextCleaner. Executor-local checkpoint
-    storage is the remaining trade (an executor loss mid-run fails the
-    job; rounds are few, a rerun is cheap -- switch to reliable
-    checkpoint() if that ever matters).
+    2-3 rounds; chains of length L need ~log2(L). Each round's exact
+    changed-label count is its convergence aggregate, observed in the
+    round's own checkpoint job (lineage policy: operators/_iterate.py);
+    raises if max_iters rounds don't converge. Invariant: a vertex's
+    label is always the id of some vertex in its own component
+    (neighbor-min picks a neighbor's label, the jump picks that
+    vertex's label), and at fixpoint adjacent labels are equal, so
+    every component carries its min id exactly -- the recursive-CTE
+    cross-check and union-find twins pin this.
 
     Vertices appearing in no pair are their own component and are NOT in
     the output (join back against the corpus for singletons).
@@ -706,68 +695,53 @@ def connected_components(
         .distinct()
         .persist()
     )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint()
-    )
-    _CHECKPOINT_EVERY = 3
-    persisted_prev: DataFrame | None = None
-    try:
-        for i in range(max_iters):
-            neighbor_min = (
-                edges.join(labels, edges.dst == labels.id)
-                .groupBy("src")
-                .agg(F.min("component").alias("_nmin"))
-            )
-            new_labels = (
-                labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("component"), F.coalesce("_nmin", F.col("component"))
-                    ).alias("component"),
-                )
-            )
-            # pointer jumping: one label-graph hop (label := label of the
-            # vertex the label names). Labels only decrease and always
-            # name a same-component vertex, so this is safe -- and it
-            # turns O(diameter) convergence into O(log diameter).
-            jump = new_labels.select(
-                F.col("id").alias("component"),
-                F.col("component").alias("_jc"),
-            )
-            new_labels = new_labels.join(jump, "component", "left").select(
-                "id",
-                F.least(
-                    F.col("component"),
-                    F.coalesce("_jc", F.col("component")),
-                ).alias("component"),
-            )
-            if (i + 1) % _CHECKPOINT_EVERY == 0:
-                new_labels = new_labels.localCheckpoint()
-                newly_persisted = None
-            else:
-                new_labels = new_labels.persist()
-                newly_persisted = new_labels
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.component") != F.col("o.component"))
-                .count()
-            )
-            # the count materialized new_labels, so the prior round's
-            # persisted frame can be released deterministically
-            if persisted_prev is not None:
-                persisted_prev.unpersist()
-            persisted_prev = newly_persisted
-            labels = new_labels
-            if changed == 0:
-                return labels.select("id", "component")
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds"
+
+    def min_label_step(labels: DataFrame, _i: int, _seen) -> DataFrame:
+        neighbor_min = (
+            edges.join(labels, edges.dst == labels.id)
+            .groupBy("src")
+            .agg(F.min("component").alias("_nmin"))
         )
+        new_labels = labels.join(
+            neighbor_min, labels.id == neighbor_min.src, "left"
+        ).select(
+            "id",
+            F.col("component").alias("_was"),
+            F.least(
+                F.col("component"), F.coalesce("_nmin", F.col("component"))
+            ).alias("component"),
+        )
+        # pointer jumping: one label-graph hop (label := label of the
+        # vertex the label names). Labels only decrease and always
+        # name a same-component vertex, so this is safe -- and it
+        # turns O(diameter) convergence into O(log diameter).
+        jump = new_labels.select(
+            F.col("id").alias("component"), F.col("component").alias("_jc")
+        )
+        return new_labels.join(jump, "component", "left").select(
+            "id",
+            F.least(
+                F.col("component"), F.coalesce("_jc", F.col("component"))
+            ).alias("component"),
+            "_was",
+        )
+
+    try:
+        labels, done = _iterate(
+            edges.select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("component", F.col("id")),
+            min_label_step,
+            max_iters,
+            until=[
+                F.count_if(F.col("component") != F.col("_was")).alias("n")
+            ],
+        )
+        if not done:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iters} rounds"
+            )
+        return labels.select("id", "component")
     finally:
         edges.unpersist()
 

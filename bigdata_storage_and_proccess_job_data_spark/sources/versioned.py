@@ -530,18 +530,24 @@ def _bloom_words(spark: SparkSession, pairs: DataFrame, m_by_file: dict, k: int)
     )
 
 
-def _bloom_entry_d_bound(entry: dict, k: int, target_fpp: float) -> int:
+def _bloom_entry_d_bound(
+    entry: dict, k: int, target_fpp: "float | None"
+) -> "int | None":
     """Distinct-count upper bound for an existing per-file bloom entry:
     the stored ``d`` when present (r15+ manifests record the bound the
-    bitmap was sized from), else inverted from ``m`` -- _bloom_bits
-    only ever rounds m UP from k*d / -ln(1-fpp^(1/k)), so
-    d <= m * -ln(1-fpp^(1/k)) / k holds and its floor is a valid
-    integer bound."""
+    bitmap was sized from), else inverted from ``m`` at the manifest's
+    recorded ``target_fpp`` -- _bloom_bits only ever rounds m UP from
+    k*d / -ln(1-fpp^(1/k)), so d <= m * -ln(1-fpp^(1/k)) / k holds and
+    its floor is a valid integer bound. None when the manifest records
+    neither: a legacy manifest may have been built looser than the
+    0.01 default, and inverting at 0.01 would then UNDER-estimate."""
     import math
 
     d = entry.get("d")
     if d is not None:
         return int(d)
+    if target_fpp is None:
+        return None
     return int(
         entry["m"] * (-math.log(1.0 - target_fpp ** (1.0 / k))) / k
     )
@@ -579,13 +585,16 @@ def _bloom_rebuild_spliced(
     FP rate only ever improves vs target; pruning correctness is
     m-independent because every entry stores its own ``m``. The sizing
     target_fpp comes from the manifest payload when recorded (r15+;
-    older manifests sized at the 0.01 default)."""
+    older manifests sized at the 0.01 default). A column whose old
+    entries carry no usable bound (no ``d`` and no recorded
+    target_fpp) is sized from the footer row count alone."""
     import glob as _glob
 
     import pyarrow.parquet as _pq
 
     k = old_payload.get("k", 5)
-    target_fpp = old_payload.get("target_fpp") or 0.01
+    recorded_fpp = old_payload.get("target_fpp")
+    target_fpp = recorded_fpp or 0.01
     old_files = old_payload.get("files", {})
     cols = sorted({cname for per in old_files.values() for cname in per})
     out: dict[str, dict] = {
@@ -595,18 +604,18 @@ def _bloom_rebuild_spliced(
     }
     # distinct-count budget per column: what the rewritten-away files'
     # entries claimed, summed (absent entry == all-NULL col in that
-    # file == zero distinct values)
+    # file == zero distinct values); None when an entry has no bound
     rewritten_away = [
         per for fname, per in old_files.items() if fname not in linked_names
     ]
-    cap_by_col = {
-        col: sum(
-            _bloom_entry_d_bound(per[col], k, target_fpp)
+    cap_by_col = {}
+    for col in cols:
+        bounds = [
+            _bloom_entry_d_bound(per[col], k, recorded_fpp)
             for per in rewritten_away
             if col in per
-        )
-        for col in cols
-    }
+        ]
+        cap_by_col[col] = None if None in bounds else sum(bounds)
     new_paths = [
         p
         for p in sorted(_glob.glob(os.path.join(new_snap, "*.parquet")))
@@ -622,7 +631,7 @@ def _bloom_rebuild_spliced(
             d_by_file = {
                 f: (
                     rows
-                    if col in changed_cols
+                    if col in changed_cols or cap_by_col[col] is None
                     else min(rows, cap_by_col[col])
                 )
                 for f, rows in rows_by_file.items()
@@ -1569,9 +1578,13 @@ def scd2_join(
 
 def _collect_metrics_count(df: DataFrame, name: str) -> int:
     """Number of CollectMetrics nodes named ``name`` in ``df``'s
-    analyzed logical plan -- the enforcement walk for _cow_rewrite's
-    observe-exactly-once contract. Walks the JVM tree directly (no
-    plan-string grep, which maxPlanStringLength could truncate)."""
+    OPTIMIZED logical plan -- the enforcement walk for _cow_rewrite's
+    observe-exactly-once contract. Optimized, not analyzed: the
+    optimizer prunes a branch it can prove empty (PruneFilters on
+    ``aff.filter(lit(False))``, ``aff.limit(0)``) together with its
+    CollectMetrics node, and a metric pruned there never fires at
+    runtime. Walks the JVM tree directly (no plan-string grep, which
+    maxPlanStringLength could truncate)."""
 
     def walk(jnode) -> int:
         n = (
@@ -1587,7 +1600,7 @@ def _collect_metrics_count(df: DataFrame, name: str) -> int:
             n += walk(ch.apply(i))
         return n
 
-    return walk(df._jdf.queryExecution().analyzed())
+    return walk(df._jdf.queryExecution().optimizedPlan())
 
 
 def _cow_rewrite(
@@ -1682,7 +1695,7 @@ def _cow_rewrite(
     # routes would make obs.get block forever (the metric never
     # fires), two routes (a union / self-join of ``aff``) would
     # double-count matches and silently corrupt rows_deleted /
-    # rows_updated and the zero-match rollback decision. The analyzed
+    # rows_updated and the zero-match rollback decision. The optimized
     # plan of the callback's output is checked for exactly one
     # CollectMetrics node carrying this commit's unique observation
     # name BEFORE any side effect (no claim, no dir, no job), so a
@@ -1704,8 +1717,11 @@ def _cow_rewrite(
             f"{obs_name!r}); zero routes would hang the match-count "
             f"observation, multiple routes would double-count matches. "
             f"Derive the output from ``aff`` by filter/withColumns/"
-            f"join -- a pure-insert callback must still reference it "
-            f"once (e.g. union an aff.filter(lit(False)) branch)."
+            f"join -- a pure-insert callback keeps ``aff`` itself and "
+            f"unions the new rows onto it (aff.unionByName(new_rows)); "
+            f"a branch the optimizer can prove empty, such as "
+            f"aff.filter(lit(False)) or aff.limit(0), is pruned "
+            f"together with its metric."
         )
     if expected is not None:
         cur = current_version(table_dir) or 0

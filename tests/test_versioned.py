@@ -2152,6 +2152,117 @@ def test_cow_rewrite_rejects_misrouted_observation(spark, tmp_path):
     assert versioned.read_version(spark, table).count() == 989
 
 
+def test_cow_rewrite_contract_checks_the_optimized_plan(spark, tmp_path):
+    """A pure-insert callback that routes ``aff`` through a branch the
+    optimizer proves empty (filter(lit(False)), limit(0)) loses the
+    observation with the pruned branch -- obs.get would block forever
+    -- so the contract check, run on the optimized plan, rejects it
+    before any side effect. The route the error message recommends
+    (keep ``aff``, union the new rows onto it) commits."""
+    import os
+
+    import pytest
+
+    table = str(tmp_path / "obs_pruned")
+    df = spark.range(0, 1000).selectExpr("id AS k", "id % 5 AS p")
+    v1 = versioned.commit_version(df.coalesce(2), table, stats_cols=["k"])
+    new_rows = spark.range(5000, 5003).selectExpr("id AS k", "id % 5 AS p")
+
+    for pruned in (
+        lambda aff, pred: aff.filter(F.lit(False)).unionByName(new_rows),
+        lambda aff, pred: aff.limit(0).unionByName(new_rows),
+    ):
+        with pytest.raises(ValueError, match="exactly once") as err:
+            versioned._cow_rewrite(
+                spark, table, "k", 10, 20, pruned, None, "rows_in_band",
+                always_commit=True,
+            )
+        assert versioned.versions(table) == [v1]
+        assert not os.path.exists(os.path.join(table, f"v={v1 + 1}"))
+    assert "aff.unionByName(new_rows)" in str(err.value)
+
+    rep = versioned._cow_rewrite(
+        spark,
+        table,
+        "k",
+        10,
+        20,
+        lambda aff, pred: aff.unionByName(new_rows),
+        None,
+        "rows_in_band",
+        always_commit=True,
+    )
+    assert rep["version"] == v1 + 1 and rep["rows_in_band"] == 11
+    got = versioned.read_version(spark, table)
+    assert got.count() == 1003
+    assert got.filter(F.col("k") >= 5000).count() == 3
+
+
+def test_bloom_splice_uncapped_for_legacy_manifest_without_fpp(
+    spark, tmp_path
+):
+    """A legacy manifest recording neither ``d`` nor ``target_fpp`` may
+    have been built looser than the 0.01 default; inverting its ``m``
+    at 0.01 would under-estimate the distinct count and undersize the
+    spliced bitmaps. Such columns are sized from the footer row count.
+    A manifest that records its target_fpp keeps the inverted cap."""
+    import glob
+    import json
+    import os
+
+    df = spark.range(0, 4000).selectExpr(
+        "id AS k", "CONCAT('s', CAST(id % 5 AS STRING)) AS status"
+    )
+
+    def spliced(name: str, strip: tuple) -> tuple[dict, dict]:
+        table = str(tmp_path / name)
+        v1 = versioned.commit_version(
+            df.repartitionByRange(6, "k").sortWithinPartitions("k"),
+            table,
+            stats_cols=["k"],
+        )
+        snap = f"{table}/v={v1}"
+        versioned.write_bloom_manifest(
+            spark, snap, ["status"], target_fpp=0.1
+        )
+        path = os.path.join(snap, "_bloom.json")
+        with open(path) as fh:
+            payload = json.load(fh)
+        for key in strip:
+            payload.pop(key, None)
+        for per in payload["files"].values():
+            per["status"].pop("d")
+        with open(path, "w") as fh:
+            json.dump(payload, fh)
+        rep = versioned.delete_where(spark, table, "k", 100, 199)
+        new_snap = f"{table}/v={rep['version']}"
+        with open(os.path.join(new_snap, "_bloom.json")) as fh:
+            new = json.load(fh)
+        old_inodes = {
+            os.stat(p).st_ino for p in glob.glob(f"{snap}/*.parquet")
+        }
+        rows = {}
+        for p in glob.glob(f"{new_snap}/*.parquet"):
+            if os.stat(p).st_ino not in old_inodes:
+                rows[os.path.basename(p)] = (
+                    spark.read.parquet(p).count()
+                )
+        assert rows
+        return new, rows
+
+    legacy, rows = spliced("legacy", ("target_fpp",))
+    for fname, n in rows.items():
+        st = legacy["files"][fname]["status"]
+        assert st["d"] == n
+        assert st["m"] >= versioned._bloom_bits(n, legacy["k"], 0.01)
+    recorded, rows = spliced("recorded", ())
+    for fname, n in rows.items():
+        st = recorded["files"][fname]["status"]
+        # inverted at the recorded 0.1: the low-NDV cap still binds
+        assert st["d"] < n
+        assert st["m"] == versioned._bloom_bits(st["d"], recorded["k"], 0.1)
+
+
 def test_bloom_splice_caps_low_ndv_columns(spark, tmp_path):
     """VERDICT r14 #3/#4: after a COW delete, a duplicate-heavy
     column's rebuilt bloom bitmaps are sized from the old entries'
