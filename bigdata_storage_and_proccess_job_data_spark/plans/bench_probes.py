@@ -1,10 +1,9 @@
 """Bench-only data-skipping probes (VERDICT r5 #8).
 
 These run in bench.py alongside the registered headline queries but are
-NOT in the query registry: the registry sits at its 100-query ceiling
-(registry.MAX_REGISTERED), and a probe whose whole point is a prepared
+NOT in the query registry: a probe whose whole point is a prepared
 physical LAYOUT (range-clustered files + parquet bloom filters) does not
-fit the registry's read-the-fixture-as-is contract anyway. Split:
+fit the registry's read-the-fixture-as-is contract. Split:
 
 - ensure_layouts() builds the layout ONCE per fixture generation
   (memoized on source path + mtime + size) into a temp dir; bench.py
@@ -380,10 +379,9 @@ def cow_delete_fragmented(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def skew_distinct_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The naive half of the skew-distinct MEASURED TWIN, moved here
-    from the registry when it retired r14 (registry.RETIRED
-    ["skew_distinct_naive"]; its oracle was byte-identical to the
-    still-registered skew_distinct_spread's). Exact distinct-line-uid
+    """The naive half of the skew-distinct MEASURED TWIN; the
+    registered skew_distinct_spread computes the same counts under the
+    same oracle. Exact distinct-line-uid
     count per Zipf company, written the way users write it:
     groupBy(key).agg(size(collect_set(v))) -- correct, but the hot
     key's every distinct value funnels through ONE reducer's set

@@ -46,19 +46,8 @@ def _sql_stopword_hits(words: list[str]) -> str:
     )
 
 
-# ---------------------------------------------------------------------------
-# RETIRED r8 (registry.RETIRED["dedup_exact_docs"]): the md5-of-
-# normalized-text content hash and min-doc_id keeper rule are a
-# hash-checked sub-expression of clean_corpus's oracle (its keeper
-# window: MIN(doc_id) OVER (PARTITION BY md5(lower(trim(text))))), and
-# the grouped dup-count shape stays driver-checked by dedup_latest /
-# duplicate_ngram_spans. operators/dedup.duplicate_groups keeps its
-# unit tests.
-# ---------------------------------------------------------------------------
-
-
-# (leakage_safe_split -- the paired r8 promotion -- is registered in the
-# corpus-sampling section below, after _md5_hash60_sql is defined.)
+# (leakage_safe_split is registered in the corpus-sampling section below,
+# after _md5_hash60_sql is defined.)
 
 
 # ---------------------------------------------------------------------------
@@ -182,16 +171,6 @@ def fingerprint_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup candidate generation."""
     docs = load_table(spark, sf_dir, "documents")
     return docs.select("doc_id", text.fingerprint("text").alias("fingerprint"))
-
-
-# ---------------------------------------------------------------------------
-# RETIRED r9 (registry.RETIRED["ngram_jaccard_pairs"]): the exact
-# word-bigram Jaccard pipeline's oracle was byte-identical to
-# minhash_near_dups' oracle below, and LSH output == exact output is
-# test-pinned, so the whole result stays hash-checked whenever
-# minhash_near_dups rows. operators/neardup.jaccard_pairs unchanged,
-# unit-tested, and still the verify stage inside minhash_dedup_pairs.
-# ---------------------------------------------------------------------------
 
 
 # ---------------------------------------------------------------------------
@@ -387,14 +366,6 @@ _KNN_ORACLE = f"""
           FROM scored
         ) WHERE rank <= 5
     """
-
-
-# knn_brute_force RETIRED r14 (registry.RETIRED["knn_brute_force"],
-# the R14 ledger's knn_sq8 slot): its oracle was BYTE-IDENTICAL to
-# knn_arrow's (_KNN_ORACLE above is shared), so the exact top-5 result
-# set stays hash-checked every time knn_arrow rows; brute_force_topk
-# itself stays the exact stage INSIDE ann_recall's driver row and
-# keeps its operator tests. Operator code unchanged.
 
 
 @register(
@@ -666,19 +637,7 @@ def embedding_neardup_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# Token explode: corpus word frequencies (lateral-view shape)
-# RETIRED r8 (registry.RETIRED["word_frequencies"]): the tokenize ->
-# explode -> hash-agg -> top-V count is EXACTLY the fit stage of
-# unigram_surprisal's registered oracle (its `top` CTE: token counts
-# ordered c DESC, t ASC, LIMIT V) -- hash-checked there every time the
-# query rows; the explode+topk plan shape also stays pinned by
-# chunk_documents and lang_distribution. No operator code removed.
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
-# Corpus quality: unigram LM surprisal (CCNet shape) -- promoted r8
-# (VERDICT r7 #4, the builder's own R8 promotion note)
+# Corpus quality: unigram LM surprisal (CCNet shape)
 # ---------------------------------------------------------------------------
 @register(
     "unigram_surprisal",
@@ -865,16 +824,6 @@ def _media_exact_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# media_features_knn RETIRED r7 (registry.RETIRED["media_features_knn"],
-# VERDICT r6 #3): the blake2b + IVF tail is not SQL-expressible, so the
-# registration spent a driver window slot on a guaranteed rows-only row
-# every other round while its unique surface stayed covered by
-# media_features_exact (exact oracle over the same binary assembly +
-# Arrow extraction), knn_ivf (exact md5-centroid oracle since r8) + recall tests, and
-# tests/test_multimodal.py's recall gate, which now drives the pipeline
-# via _media_knn_lazy directly (the operator code is unchanged).
-
-
 # ---------------------------------------------------------------------------
 # Multimodal bridge, oracle-graded: md5 features -> exact cosine top-k
 # ---------------------------------------------------------------------------
@@ -1047,28 +996,7 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# RETIRED r9 (registry.RETIRED["contamination_check"]): the identical
-# corpus.contamination_pairs call (ngram=5, min_shared=3, % 20 residue
-# split) is the `contaminated` CTE of decontaminated_train's oracle --
-# pair generation and threshold stay hash-checked through the anti-join
-# every time that query rows; per-pair n_shared keeps full DuckDB
-# parity in tests/test_corpus.py. Operator code unchanged.
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
-# Corpus prep: deterministic hash sampling
-# RETIRED r7 (registry.RETIRED["sample_deterministic"]): the md5-bucket
-# membership filter is strictly weaker than the two A-ES/importance
-# sampling queries that use the same coin (stratified_sample_k in the
-# registry since r4, weighted_take_k promoted r7 with exact set parity);
-# corpus.deterministic_sample keeps its stability/monotonicity tests.
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
-# Corpus splitting: leakage-safe train/val/test -- promoted r8
-# (VERDICT r7 #4, the builder's own R8 promotion note)
+# Corpus splitting: leakage-safe train/val/test
 # ---------------------------------------------------------------------------
 @register(
     "leakage_safe_split",
@@ -1107,12 +1035,6 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "split")
 
 
-# ---------------------------------------------------------------------------
-# Corpus prep: token-length histogram
-# RETIRED r7 (registry.RETIRED["doc_length_histogram"]): fixed-width
-# bucket counting is the value_distribution shape (hash-checked every
-# window) applied to token_count, itself hash-checked inside text_stats /
-# corpus_token_budget; corpus.length_histogram keeps its bucket tests.
 # ---------------------------------------------------------------------------
 # Exact duplicated-substring spans (n-gram granularity)
 # ---------------------------------------------------------------------------
@@ -1237,33 +1159,6 @@ def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.percentile("n_tokens", F.lit(0.5)), 4
         ).alias("p50_tokens"),
     )
-
-
-# ---------------------------------------------------------------------------
-# RETIRED r6: embedding_norms (per-vector L2 norm / max|x| hygiene scan).
-# The registry sits at the 100-query ceiling (registry.MAX_REGISTERED);
-# registering snapshot_change_feed required a retirement, and this was
-# the query whose checked surface is most completely subsumed elsewhere:
-# the identical norm computation (sequential fold on Spark,
-# list_dot_product in DuckDB) is a hash-checked sub-expression of the
-# knn_brute_force / embedding_neardup_pairs / hybrid_search oracles, and
-# functions/vectors.py itself is unchanged and unit-tested. Full record:
-# registry.RETIRED["embedding_norms"]; the name is permanently reserved.
-
-
-# ---------------------------------------------------------------------------
-# RETIRED r13: snapshot_change_feed (versioned-table CDF change feed).
-# Registering profile_diff at the 100-query ceiling required a
-# retirement; the full record is
-# registry.RETIRED["snapshot_change_feed"] and the name is permanently
-# reserved. Coverage: change_feed's full-outer null-safe key join +
-# whole-row IS DISTINCT FROM classification is table_diff's
-# hash-checked shape row-for-row (both oracles share the FULL OUTER
-# JOIN + struct-inequality form; table_diff stays driver-rowed every
-# rotation), and the versioned-table seam itself (commit_version /
-# time travel / MERGE / diff_versions -> change_feed) keeps the full
-# tests/test_versioned.py suite. sources/versioned.py unchanged.
-# ---------------------------------------------------------------------------
 
 
 # ---------------------------------------------------------------------------
@@ -1565,18 +1460,7 @@ def stratified_sample_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# key_skew_report RETIRED r11 (registry.RETIRED["key_skew_report"]):
-# its max/mean algebra is a strict sub-shape of the skew bench pair's
-# oracle and the heavy_hitters tests; the skew family keeps
-# skewed_hot_key_agg + skew_distinct_naive/spread driver rows, and the
-# slot rows the promoted ks_test (the binning-free drift gate).
-# operators/aggregates.key_skew_report is unchanged and unit-tested.
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
-# Experiment readouts: Benjamini-Hochberg FDR control (promoted r11;
-# funnel_latency retired -- see registry.RETIRED["funnel_latency"])
+# Experiment readouts: Benjamini-Hochberg FDR control
 # ---------------------------------------------------------------------------
 @register(
     "bh_adjust",
@@ -1637,8 +1521,7 @@ def bh_adjust_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Drift gate: exact two-sample Kolmogorov-Smirnov (promoted r11;
-# key_skew_report retired -- see the note above)
+# Drift gate: exact two-sample Kolmogorov-Smirnov
 # ---------------------------------------------------------------------------
 @register(
     "ks_test",
@@ -1710,11 +1593,7 @@ def ks_test_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Labeling QA: majority-vote consensus labels (promoted r12;
-# event_paths_top RETIRED the same round --
-# registry.RETIRED["event_paths_top"]: its plurality window is exactly
-# this winner window, and its lead-sequence / top-k shapes keep their
-# own driver rows)
+# Labeling QA: majority-vote consensus labels
 # ---------------------------------------------------------------------------
 @register(
     "consensus_labels",
@@ -1771,10 +1650,7 @@ def consensus_labels_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Labeling QA: Fleiss' kappa multi-rater agreement (promoted r12;
-# urgent_customers_semi RETIRED the same round --
-# registry.RETIRED["urgent_customers_semi"]: the left-semi shape keeps
-# two driver rows and this query's kept-items semi join)
+# Labeling QA: Fleiss' kappa multi-rater agreement
 # ---------------------------------------------------------------------------
 @register(
     "fleiss_kappa",
@@ -2224,22 +2100,14 @@ _PQ_TOPK_SQL = f"""
     """
 
 
-# knn_pq RETIRED r14 (registry.RETIRED["knn_pq"], the R14 ledger's
-# knn_ivfpq slot): knn_ivfpq below runs the same md5 codebooks and the
-# same ADC scoring on the cell-pruned candidate side -- and full probe
-# with residual=False degenerates to EXACTLY pq_topk_from_codes
-# (tests/test_similarity.py:test_ivfpq_full_probe_equals_pq) -- so the
-# PQ search path stays value-hashed every time knn_ivfpq rows.
-# _PQ_TOPK_SQL above stays: it is the flat-PQ half of the IVF-PQ
-# oracle's CTE chain and encode_pq/pq_topk_from_codes keep their own
-# full parity tests. Operator code unchanged.
+# _PQ_TOPK_SQL above is the flat-PQ half of knn_ivfpq's oracle CTE chain;
+# encode_pq / pq_topk_from_codes keep their own parity tests.
 
 
 # ---------------------------------------------------------------------------
-# Similarity search: IVF-pruned PQ/ADC top-k -- promoted r14 (the pinned
-# R14 ledger, VERDICT r13 #1). The ANN ladder's top rung: the md5
-# coarse quantizer that graduated knn_ivf composes with the md5
-# codebooks that graduated knn_pq, so the oracle independently rebuilds
+# Similarity search: IVF-pruned PQ/ADC top-k. The ANN ladder's top
+# rung: the md5 coarse quantizer that graduated knn_ivf composes with
+# the md5 codebooks that graduated knn_pq, so the oracle independently rebuilds
 # BOTH models and replays cell assignment (encode_ivfpq's np.argmax
 # tiebreak = LOWEST cell id -- unlike ivf_topk's array_max HIGHEST; the
 # SQL mirrors the implementation it checks), probe ranking, PQ
@@ -2375,11 +2243,11 @@ def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Similarity search: int8 scalar-quantized rerank tier -- promoted r14
-# (the pinned R14 ledger, VERDICT r13 #1). The storage tier between raw
-# vectors and PQ codes: per-row absmax-symmetric int8 with no trained
-# artifact, so the ENTIRE path -- normalize, scale, floor-grid encode,
-# dequantize, cosine, rank -- replays in SQL with no md5 bridge needed.
+# Similarity search: int8 scalar-quantized rerank tier. The storage
+# tier between raw vectors and PQ codes: per-row absmax-symmetric int8
+# with no trained artifact, so the ENTIRE path -- normalize, scale,
+# floor-grid encode, dequantize, cosine, rank -- replays in SQL with no
+# md5 bridge needed.
 # ---------------------------------------------------------------------------
 _SQ8_COS = (
     "CASE WHEN sqrt(list_dot_product(q.v, q.v)) > 0 "
@@ -2440,11 +2308,11 @@ def knn_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     L2-normalizes, takes its own absmax/127 scale and stores int8
     codes; queries score against the DEQUANTIZED codes -- the
     compressed brute-force rerank reading ~1 byte per component where
-    the raw scan reads 8. Same deliberate broadcast exact-scoring
-    baseline class as the retired knn_brute_force (the documented BNLJ
-    waiver): this IS the rerank stage that runs after the pruned
-    lsh/ivf/pq candidate passes. Everything is native expressions
-    inside whole-stage codegen -- no Python row boundary (plan-pinned).
+    the raw scan reads 8. A deliberate broadcast exact-scoring
+    baseline (the documented BNLJ waiver): this IS the rerank stage that
+    runs after the pruned lsh/ivf/pq candidate passes. Everything is
+    native expressions inside whole-stage codegen -- no Python row
+    boundary (plan-pinned).
     Full DuckDB replay parity proven in
     tests/test_similarity.py:test_sq8_duckdb_replay_parity (same oracle
     string)."""
@@ -2504,8 +2372,7 @@ def weighted_take_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Corpus write planning: weight-balanced training shards -- promoted r14
-# (the pinned R14 ledger, VERDICT r13 #1)
+# Corpus write planning: weight-balanced training shards
 # ---------------------------------------------------------------------------
 @register(
     "balanced_shards",

@@ -951,12 +951,9 @@ def change_feed(
     """The frame-level core of diff_versions: row-level changes between
     any two same-schema keyed frames, independent of where the snapshots
     came from (versioned table, two parquet dirs, two query results).
-    diff_versions = change_feed over two committed versions. (The
-    snapshot_change_feed query drove this operator under a driver hash
-    until its r13 retirement; the full-outer + struct-compare semantics
-    stay driver-checked row-for-row through table_diff's oracle and
-    pinned by this module's tests -- registry.RETIRED records the
-    merge. VERDICT r5 #6 originated the exact-oracle form.)
+    diff_versions = change_feed over two committed versions. Its
+    full-outer + struct-compare semantics are table_diff's oracle shape
+    row-for-row, and this module's tests pin them.
 
     ``align_additive=True`` lets the feed span an ADDITIVE schema
     evolution (apply_changes(merge_schema=True)): a column present on

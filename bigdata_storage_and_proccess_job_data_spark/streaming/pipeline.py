@@ -15,12 +15,13 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from bigdata_storage_and_proccess_job_data_spark.functions.eventtime import interval_expr
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from bigdata_storage_and_proccess_job_data_spark.functions.eventtime import ensure_ltz
+from bigdata_storage_and_proccess_job_data_spark.functions.eventtime import (
+    ensure_ltz,
+    interval_expr,
+)
 
 
 def file_stream(
@@ -372,6 +373,7 @@ def dedup_ingest_stream(
             .drop("_keep")
             .persist()
         )
+        batch2 = None
         try:
             # 2. near-dup within the batch: drop the larger id of each pair
             within = neardup.minhash_dedup_pairs(
@@ -401,10 +403,8 @@ def dedup_ingest_stream(
             )
         finally:
             batch.unpersist()
-            try:
+            if batch2 is not None:
                 batch2.unpersist()
-            except NameError:
-                pass
 
     writer = df.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_dir
@@ -414,45 +414,37 @@ def dedup_ingest_stream(
     return writer.start()
 
 
-def _apply_view_batch(
+def _fold_batch(
     batch_df: DataFrame,
     batch_id: int,
     table_dir: str,
-    keys: list[str],
-    measures: list[str],
+    partial: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
 ) -> bool:
-    """One micro-batch of the maintained-view sink, factored out so the
-    exactly-once guard is directly testable. Returns True if the batch
-    was applied, False if it was recognized as a replay and skipped.
+    """Fold one micro-batch into a versioned state table, exactly once.
+    ``partial`` builds the batch's state; ``merge`` folds it into the
+    table's current state. Returns True if the batch was applied, False
+    if it was empty or recognized as a replay and skipped.
 
-    Exactly-once without content-idempotence: folding the same rows
-    into count/sum state twice double-counts, so the sink records the
-    batch id IN the snapshot it publishes (commit_version(meta=...) --
-    the marker and the fold share one atomic pointer swap) and a
-    replayed batch sees its own marker and no-ops. Concurrency: the
-    commit carries expected=<read version>, so an unrelated writer
-    racing the view table fails the sink loudly instead of losing
-    either update."""
-    from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
+    The sink records the batch id IN the snapshot it publishes
+    (commit_version(meta=...) -- the marker and the fold share one
+    atomic pointer swap), so a replayed batch sees its own marker and
+    no-ops. Concurrency: the commit carries expected=<read version>, so
+    an unrelated writer racing the table fails the sink loudly instead
+    of losing either update."""
     from bigdata_storage_and_proccess_job_data_spark.sources import versioned
 
     if batch_df.isEmpty():
         return False
-    spark = batch_df.sparkSession
     cur = versioned.current_version(table_dir)
-    if cur is not None:
+    if cur is None:
+        new_state = partial(batch_df)
+    else:
         meta = versioned.commit_meta(table_dir, cur) or {}
         if meta.get("last_batch", -1) >= batch_id:
             return False  # replay of an already-folded batch
-        state = versioned.read_version(spark, table_dir, cur)
-        new_state = aggregates.agg_state_merge(
-            state,
-            aggregates.agg_state_init(batch_df, keys, measures),
-            keys,
-            measures,
-        )
-    else:
-        new_state = aggregates.agg_state_init(batch_df, keys, measures)
+        state = versioned.read_version(batch_df.sparkSession, table_dir, cur)
+        new_state = merge(state, partial(batch_df))
     versioned.commit_version(
         new_state,
         table_dir,
@@ -460,6 +452,29 @@ def _apply_view_batch(
         meta={"last_batch": batch_id},
     )
     return True
+
+
+def _apply_view_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    table_dir: str,
+    keys: list[str],
+    measures: list[str],
+) -> bool:
+    """One micro-batch of the maintained-view sink (see _fold_batch).
+    Folding the same rows into count/sum state twice double-counts, so
+    the batch-id marker is what makes this sink exactly-once."""
+    from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
+
+    return _fold_batch(
+        batch_df,
+        batch_id,
+        table_dir,
+        lambda b: aggregates.agg_state_init(b, keys, measures),
+        lambda state, part: aggregates.agg_state_merge(
+            state, part, keys, measures
+        ),
+    )
 
 
 def maintain_view_stream(
@@ -503,9 +518,7 @@ def _apply_sketch_batch(
     dims: list[str] | None,
     k: int,
 ) -> bool:
-    """One micro-batch of the maintained-sketch sink (factored out so
-    the exactly-once guard is directly testable, the _apply_view_batch
-    shape). Returns False on empty batches and recognized replays.
+    """One micro-batch of the maintained-sketch sink (see _fold_batch).
 
     Unlike count/sum state, the KMV fold is CONTENT-idempotent (merge
     is a set union: folding the same batch twice cannot change the
@@ -514,30 +527,16 @@ def _apply_sketch_batch(
     it. Still recorded: an exactly-once audit trail costs one meta
     field."""
     from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
-    from bigdata_storage_and_proccess_job_data_spark.sources import versioned
 
-    if batch_df.isEmpty():
-        return False
-    spark = batch_df.sparkSession
-    cur = versioned.current_version(table_dir)
-    partial = aggregates.kmv_sketch(batch_df, key, dims=dims, k=k)
-    if cur is not None:
-        meta = versioned.commit_meta(table_dir, cur) or {}
-        if meta.get("last_batch", -1) >= batch_id:
-            return False
-        state = versioned.read_version(spark, table_dir, cur)
-        new_state = aggregates.kmv_merge(
-            state.unionByName(partial), dims=dims, k=k
-        )
-    else:
-        new_state = partial
-    versioned.commit_version(
-        new_state,
+    return _fold_batch(
+        batch_df,
+        batch_id,
         table_dir,
-        expected=cur,
-        meta={"last_batch": batch_id},
+        lambda b: aggregates.kmv_sketch(b, key, dims=dims, k=k),
+        lambda state, part: aggregates.kmv_merge(
+            state.unionByName(part), dims=dims, k=k
+        ),
     )
-    return True
 
 
 def maintain_sketch_stream(
@@ -586,9 +585,8 @@ def _apply_dd_batch(
     dims: list[str] | None,
     gamma: float,
 ) -> bool:
-    """One micro-batch of the maintained-quantile sink (the
-    _apply_sketch_batch shape). Returns False on empty batches and
-    recognized replays.
+    """One micro-batch of the maintained-quantile sink (see
+    _fold_batch).
 
     CONTRAST with the KMV sink: DDSketch merge is ADDITIVE (bin counts
     SUM), not a set union -- folding the same batch twice double-counts
@@ -599,30 +597,16 @@ def _apply_dd_batch(
     crash either sees its own marker (skip) or the pre-batch state
     (apply) -- never half."""
     from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
-    from bigdata_storage_and_proccess_job_data_spark.sources import versioned
 
-    if batch_df.isEmpty():
-        return False
-    spark = batch_df.sparkSession
-    cur = versioned.current_version(table_dir)
-    partial = aggregates.dd_sketch(batch_df, col, gamma=gamma, dims=dims)
-    if cur is not None:
-        meta = versioned.commit_meta(table_dir, cur) or {}
-        if meta.get("last_batch", -1) >= batch_id:
-            return False
-        state = versioned.read_version(spark, table_dir, cur)
-        new_state = aggregates.dd_merge(
-            state.unionByName(partial), dims=dims
-        )
-    else:
-        new_state = partial
-    versioned.commit_version(
-        new_state,
+    return _fold_batch(
+        batch_df,
+        batch_id,
         table_dir,
-        expected=cur,
-        meta={"last_batch": batch_id},
+        lambda b: aggregates.dd_sketch(b, col, gamma=gamma, dims=dims),
+        lambda state, part: aggregates.dd_merge(
+            state.unionByName(part), dims=dims
+        ),
     )
-    return True
 
 
 def maintain_quantile_stream(
@@ -673,36 +657,22 @@ def _apply_cms_batch(
     depth: int,
     weight_col: str | None,
 ) -> bool:
-    """One micro-batch of the maintained-frequency sink (the
-    _apply_dd_batch shape; CMS merge is ADDITIVE like DDSketch, so the
+    """One micro-batch of the maintained-frequency sink (see
+    _fold_batch; CMS merge is ADDITIVE like DDSketch, so the
     atomically-committed batch-id marker is correctness-critical --
     a replay would inflate every cell and CMS's one-sided guarantee
     would silently widen)."""
     from bigdata_storage_and_proccess_job_data_spark.operators import aggregates
-    from bigdata_storage_and_proccess_job_data_spark.sources import versioned
 
-    if batch_df.isEmpty():
-        return False
-    spark = batch_df.sparkSession
-    cur = versioned.current_version(table_dir)
-    partial = aggregates.cms_sketch(
-        batch_df, key, width=width, depth=depth, weight_col=weight_col
-    )
-    if cur is not None:
-        meta = versioned.commit_meta(table_dir, cur) or {}
-        if meta.get("last_batch", -1) >= batch_id:
-            return False
-        state = versioned.read_version(spark, table_dir, cur)
-        new_state = aggregates.cms_merge(state.unionByName(partial))
-    else:
-        new_state = partial
-    versioned.commit_version(
-        new_state,
+    return _fold_batch(
+        batch_df,
+        batch_id,
         table_dir,
-        expected=cur,
-        meta={"last_batch": batch_id},
+        lambda b: aggregates.cms_sketch(
+            b, key, width=width, depth=depth, weight_col=weight_col
+        ),
+        lambda state, part: aggregates.cms_merge(state.unionByName(part)),
     )
-    return True
 
 
 def maintain_frequency_stream(

@@ -19,11 +19,9 @@ def test_approx_distinct_within_tolerance(spark, oracle_sf_dir):
 
 
 def test_rollup_has_subtotals_and_grand_total(spark, oracle_sf_dir):
-    """The exact ROLLUP(region, country) body of the r14-retired
-    region_rollup query (registry.RETIRED["region_rollup"] -- the
-    grouping-set Expand shape stays driver-rowed by
-    cube_segment_priority / grouping_sets_mix; this test keeps the
-    rollup level semantics value-pinned)."""
+    """ROLLUP(region, country): the grouping-set Expand shape is
+    oracle-checked by cube_segment_priority / grouping_sets_mix; this
+    test value-pins the rollup's subtotal and grand-total levels."""
     from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (
         stable_round,
     )
@@ -57,12 +55,11 @@ def test_rollup_has_subtotals_and_grand_total(spark, oracle_sf_dir):
 
 
 def test_skew_distinct_naive_probe_equals_spread_twin(spark, oracle_sf_dir):
-    """The naive skew-distinct twin left the registry r14 (retired into
-    join_size_report) and moved to plans/bench_probes.py -- which also
-    moved it out of the every-round oracle hash. This pins the measured
-    twin's CORRECTNESS link directly: the bench probe's collect_set
-    plan must produce exactly the still-registered spread rewrite's
-    result frame (same Zipf key, same distinct counts), so the bench
+    """The naive skew-distinct twin is a bench-only probe
+    (plans/bench_probes.py), outside the registry's oracle parity run.
+    This pins the measured twin's CORRECTNESS link directly: the bench
+    probe's collect_set plan must produce exactly the registered spread
+    rewrite's result frame (same Zipf key, same distinct counts), so the bench
     pair keeps comparing two verified-equal computations."""
     from bigdata_storage_and_proccess_job_data_spark.plans import (
         analytics_queries,
@@ -140,10 +137,9 @@ def test_time_range_rolling_window_parity(spark, oracle_sf_dir):
     """Time-RANGE window frames (RANGE BETWEEN INTERVAL ... PRECEDING):
     per customer, each order's trailing-90-day revenue. Distinct from
     the ROWS-frame query (rolling_order_avg): the frame is bounded by
-    EVENT TIME, so gaps matter and equal-timestamp rows are peers. The
-    registry sits at its ceiling, so this query is oracle-checked here
-    through the same parity gate the driver uses (tests/parity.py)
-    rather than holding a registry slot. Spark expresses the interval
+    EVENT TIME, so gaps matter and equal-timestamp rows are peers. This
+    query is oracle-checked here through the same parity gate the
+    driver uses (tests/parity.py). Spark expresses the interval
     frame as rangeBetween over epoch seconds (UTC-pinned session makes
     that identical to DuckDB's naive-timestamp interval arithmetic)."""
     from pyspark.sql import Window
@@ -1009,11 +1005,9 @@ def test_script_profile_hand_pins_and_parity(spark, oracle_sf_dir):
 
 def test_rank_family_window_parity(spark, oracle_sf_dir):
     """ntile / percent_rank / cume_dist over one shared ordered window
-    replay value-for-value in DuckDB -- the retired customer_value_ranks
-    query's oracle, carried here verbatim as its r10 coverage merge
-    (registry.RETIRED): the registered rank row is now rfm_scores'
-    skew-free two-phase form, and this pins the window built-ins it no
-    longer exercises."""
+    replay value-for-value in DuckDB. The registered rank query,
+    rfm_scores, uses a skew-free two-phase form instead, so this pins
+    the window built-ins it does not exercise."""
     from pyspark.sql import Window
 
     from bigdata_storage_and_proccess_job_data_spark.functions.numeric import (

@@ -76,11 +76,10 @@ def test_resize_then_decode_roundtrip(spark, media_df):
 
 
 def test_media_features_knn_query_recall(spark, sf_dir):
-    """The media->IVF pipeline (registry entry RETIRED r7 -- the blake2b
-    + IVF tail is not SQL-expressible, so its driver row was rows-only
-    by construction; this test IS the retirement's coverage note): IVF
-    ANN over fake-codec features must rank sanely and reach decent
-    recall vs exact brute force over the same feature frame."""
+    """The media->IVF pipeline (not a registry query: the blake2b + IVF
+    tail is not SQL-expressible, so it has no oracle): IVF ANN over
+    fake-codec features must rank sanely and reach decent recall vs
+    exact brute force over the same feature frame."""
     from bigdata_storage_and_proccess_job_data_spark.operators import (
         multimodal,
         similarity,

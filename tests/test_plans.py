@@ -43,8 +43,8 @@ def test_dimension_joins_broadcast(spark, oracle_sf_dir):
 
 
 def test_anti_join_is_join_not_subquery_scan(spark, oracle_sf_dir):
-    # customers_without_orders retired r9; decontaminated_train carries
-    # the LeftAnti shape (anti-join on the contaminated-id set)
+    # decontaminated_train carries the LeftAnti shape (anti-join on the
+    # contaminated-id set)
     plan = _plan(spark, oracle_sf_dir, "decontaminated_train")
     assert "LeftAnti" in plan
 
@@ -136,12 +136,11 @@ def test_embedding_neardup_is_bucketed_not_nested_loop(spark, oracle_sf_dir):
 def test_correlated_scalar_subquery_decorrelates_and_values(
     spark, oracle_sf_dir
 ):
-    """The r13-retired small_quantity_revenue query text, verbatim (the
-    registry.RETIRED coverage contract): Catalyst must rewrite the
-    correlated scalar subquery (TPC-H Q17 shape) into an aggregate +
-    join -- never a per-row subquery or nested loop -- AND the values
-    must keep full DuckDB parity. The correlated-EXISTS family keeps
-    its driver row via priority_with_late_lines."""
+    """A correlated scalar subquery outside the registry (TPC-H Q17
+    shape): Catalyst must rewrite it into an aggregate + join -- never a
+    per-row subquery or nested loop -- AND the values must keep full
+    DuckDB parity. The correlated-EXISTS family is registered as
+    priority_with_late_lines."""
     from bigdata_storage_and_proccess_job_data_spark.catalog import (
         register_views,
     )
@@ -177,10 +176,8 @@ def test_unpivot_is_single_pass_expand(spark, oracle_sf_dir):
 
 
 def test_semi_join_and_grouping_sets_shapes(spark, oracle_sf_dir):
-    # the left-semi plan shape, post the r12 urgent_customers_semi
-    # retirement: fleiss_kappa's kept-items membership join is the
-    # family's in-window pin (decontaminated_train / hard_negatives
-    # keep the anti side)
+    # the left-semi plan shape: fleiss_kappa's kept-items membership
+    # join (decontaminated_train / hard_negatives keep the anti side)
     plan = _plan(spark, oracle_sf_dir, "fleiss_kappa")
     assert "LeftSemi" in plan
     plan = _plan(spark, oracle_sf_dir, "grouping_sets_mix")
@@ -216,8 +213,7 @@ def test_no_scale_antipatterns_anywhere(spark, oracle_sf_dir):
     from bigdata_storage_and_proccess_job_data_spark.plans import lint
 
     bnlj_ok = {
-        # knn_sq8 IS the broadcast exact-scoring rerank baseline (the
-        # retired knn_brute_force's documented waiver class: tiny
+        # knn_sq8 IS the broadcast exact-scoring rerank baseline (tiny
         # broadcast query set x dequantized corpus; the pruned paths
         # are lsh/ivf/ivfpq)
         "knn_sq8",
@@ -298,80 +294,21 @@ def test_lint_plan_api(spark, oracle_sf_dir):
         lint.assert_scalable(slow)
 
 
-def test_driver_window_is_first_50():
-    """The driver checks exactly the first 50 registry entries; the curated
-    window (plans/__init__.py) must BE those 50, with no duplicates and no
-    names that drifted out of the registry."""
-    from bigdata_storage_and_proccess_job_data_spark import plans
-
-    window = plans.DRIVER_WINDOW_R15
-    assert len(window) == 50
-    assert len(set(window)) == 50
-    assert list(QS)[:50] == window
-    # r15 executes the pinned plan verbatim (optimization rounds run no
-    # ledger swaps)
-    assert window == list(plans.DRIVER_WINDOW_R15_PLAN)
-
-
-def test_windows_partition_registry():
-    """Registry-saturation mechanics as invariants, not prose (VERDICT
-    r5 #2): at the 100-query ceiling the current window and the pinned
-    next-round plan must PARTITION the registry -- disjoint, exhaustive,
-    50 each -- so every registered query is re-rowed within two rounds
-    and a displacement can never silently strand one. Also pins the
-    ceiling itself and that retired names really left the registry."""
+def test_driver_order_pins_first_50():
+    """The external correctness driver checks exactly the first 50
+    registry entries, so those 50 are the pinned plans.DRIVER_ORDER:
+    unique, all registered, in that order. A duplicate registration would
+    silently replace a query, so register() refuses it."""
     from bigdata_storage_and_proccess_job_data_spark import plans
     from bigdata_storage_and_proccess_job_data_spark.plans import registry
 
-    r14, r15 = set(plans.DRIVER_WINDOW_R14), set(plans.DRIVER_WINDOW_R15_PLAN)
-    names = set(QS)
-    assert len(names) == registry.MAX_REGISTERED == 100
-    assert r14 & r15 == set(), sorted(r14 & r15)
-    assert r14 | r15 == names, {
-        "unscheduled": sorted(names - (r14 | r15)),
-        "unknown": sorted((r14 | r15) - names),
-    }
-    assert len(r14) == len(r15) == 50
-    # the r13 displacement promise was kept: every query pinned into
-    # DRIVER_WINDOW_R14_PLAN is in the r14 window unless it was retired
-    # this round with a recorded coverage merge (the executed R14
-    # ledger's four retirees were all IN-plan, so the four swaps are
-    # 1:1 and nothing was displaced further)
-    for obligated in plans.DRIVER_WINDOW_R14_PLAN:
-        assert obligated in r14 or obligated in registry.RETIRED, obligated
-    # the executed R14 ledger: all four promotions row THIS round (new
-    # registrations never ship without a row), all four retirees are
-    # recorded with coverage merges
-    assert {
-        "knn_ivfpq",
-        "knn_sq8",
-        "join_size_report",
-        "balanced_shards",
-    } <= r14
-    assert "knn_pq" in registry.RETIRED
-    assert "knn_brute_force" in registry.RETIRED
-    assert "skew_distinct_naive" in registry.RETIRED
-    assert "region_rollup" in registry.RETIRED
-    # the r15 complement is the r13 window carried forward unchanged
-    assert r15 == set(plans.DRIVER_WINDOW_R13)
-    # retirement is real: retired names are out of the registry, out of
-    # both windows, and re-registration is refused
-    for retired in registry.RETIRED:
-        assert retired not in names
-        assert retired not in r14 and retired not in r15
-    import pytest
-
-    with pytest.raises(ValueError, match="retired"):
-        registry.register("embedding_norms")(lambda s, d: None)
-    with pytest.raises(ValueError, match="retired"):
-        registry.register("word_frequencies")(lambda s, d: None)
-    with pytest.raises(ValueError, match="retired"):
-        registry.register("ngram_jaccard_pairs")(lambda s, d: None)
-    with pytest.raises(ValueError, match="retired"):
-        registry.register("customers_without_orders")(lambda s, d: None)
-    # the ceiling is enforced at registration time
-    with pytest.raises(ValueError, match="ceiling"):
-        registry.register("one_query_too_many")(lambda s, d: None)
+    pinned = plans.DRIVER_ORDER
+    assert len(pinned) == len(set(pinned)) == 50
+    assert set(pinned) <= set(QS)
+    assert list(plans.queries())[:50] == pinned
+    with pytest.raises(ValueError, match="duplicate"):
+        registry.register(pinned[0])(lambda s, d: None)
+    assert registry.all_queries()[pinned[0]].fn is QS[pinned[0]].fn
 
 
 def test_late_r7_operator_plans_scale_safe(spark, sf_dir):
@@ -560,7 +497,7 @@ def test_driver_outputs_are_canonicalizable(spark, oracle_sf_dir):
     the driver's correctness gate canonicalizes results with a pandas
     sort over all columns, which crashes on list/struct/map cells
     (r7's `hashed_doc_vector` err row -- the math was right, the SHAPE
-    burned a window slot). Vector-valued surfaces reshape to long form
+    was not). Vector-valued surfaces reshape to long form
     (posexplode + generate_subscripts oracle) before registering; the
     wide array forms stay available as library functions."""
     from pyspark.sql.types import ArrayType, MapType, StructType

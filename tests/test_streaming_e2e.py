@@ -15,6 +15,7 @@ equal to a from-scratch batch recompute at every step.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -623,3 +624,24 @@ def test_maintain_frequency_stream_equals_monolithic(spark, tmp_path):
         is False
     )
     assert versioned.current_version(table) == cur
+
+
+@pytest.mark.parametrize(
+    "apply, args",
+    [
+        (pipeline._apply_view_batch, (["k"], ["v"])),
+        (pipeline._apply_sketch_batch, ("k", None, 16)),
+        (pipeline._apply_dd_batch, ("v", None, 1.05)),
+        (pipeline._apply_cms_batch, ("k", 64, 3, None)),
+    ],
+    ids=["view", "kmv", "dd", "cms"],
+)
+def test_maintained_sinks_skip_empty_batches(spark, tmp_path, apply, args):
+    """An empty micro-batch is not applied and commits no version, so the
+    state table stays uninitialized."""
+    from bigdata_storage_and_proccess_job_data_spark.sources import versioned
+
+    table = str(tmp_path / "state")
+    empty = spark.createDataFrame([], "k STRING, v LONG")
+    assert apply(empty, 0, table, *args) is False
+    assert versioned.current_version(table) is None

@@ -306,10 +306,8 @@ def test_change_feed_rejects_map_columns(spark):
 def test_change_feed_frame_level_matches_diff_versions(spark, tmp_path):
     """change_feed over two in-memory frames must equal diff_versions
     over the same frames committed as snapshots -- this pins that both
-    forms are the same operator (the snapshot_change_feed query drove
-    the frame form until its r13 retirement; table_diff keeps the
-    full-outer-diff shape's driver row, registry.RETIRED has the
-    merge)."""
+    forms are the same operator (table_diff's oracle checks the
+    full-outer-diff shape)."""
     old = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], "id LONG, name STRING"
     )
